@@ -10,7 +10,6 @@ package graft
   *
   * | property | default | governs |
   * |---|---|---|
-  * | `graft.eager.maxQueries` | 4096 | largest bounded-search batch the eager one-scan path may collect to the driver ([[graft.search.BoundedSearch]]) |
   * | `graft.distributed.minQueries` | 131072 | batch size beyond which queries stay in a DataFrame end-to-end (BoundedSearch / FlatSearch / BinaryHash large-batch twins) |
   * | `graft.cogroup.maxProbes` | 8192 | per-task probe bound of the salted cogroup scan; hot lists beyond it are salted across sub-keys |
   * | `graft.join.maxProbesPerBucket` | 8 × cogroupMaxProbes | per-LIST probe bound of the fused bucket-local scan (its tasks stream one list group at a time) |
@@ -38,24 +37,11 @@ object GraftConf {
   private def longProp(key: String, default: => Long): Long =
     sys.props.get(key).map(parsed(key, _, _.toLong)).getOrElse(default)
 
-  /** Above this query-batch size the driver-batch paths (eager
-    * one-pass, driver-staged rounds) hand off to the lazy path, which
-    * keeps all per-query decision state distributed. The 4096 default
-    * predated `searchStagedDriver` (one action per adaptive round);
-    * the r12 A/B (`tools/evidence/r12_staged_driver_ab.log`: 2M×64d,
-    * nlist=512, both arms bit-identical by construction) measured the
-    * driver arm FASTER at every size below 64k — 1.53× at 2k, 1.26×
-    * at 4k/8k, ~1.1× at 16–32k — and parity from 64k up. 32768 takes
-    * the whole measured win; past it the lazy path's zero-driver-state
-    * is free. Driver state at the cap: nq × shallow-rank depth
-    * (nlist/8+20 pairs) + one active×k collect per round — ~35 MB at
-    * 32k/nlist=512. */
-  def eagerMaxQueries: Int = intProp("graft.eager.maxQueries", 32768)
-
-  /** Above this batch size even the lazy path's driver-held structures
-    * (query vectors, centroid rankings, per-round broadcast probe maps
-    * — all O(nq)) stop being "collectable"; the fully-distributed paths
-    * keep the queries themselves in a DataFrame. */
+  /** Above this batch size the driver-decided bounded-search rounds'
+    * driver-held structures (query vectors, centroid rankings,
+    * per-round broadcast probe maps — all O(nq)) stop being
+    * "collectable"; the fully-distributed paths keep the queries
+    * themselves in a DataFrame. */
   def distributedMinQueries: Int =
     intProp("graft.distributed.minQueries", 131072)
 
@@ -123,7 +109,7 @@ object GraftConf {
 
   /** Largest edge count [[graft.ops.Components.connectedComponents]]
     * may collect for its driver union-find arm (the BoundedSearch
-    * `eagerMaxQueries` contract applied to cluster resolution): a
+    * driver-collectable batch contract applied to cluster resolution): a
     * near-dup candidate graph at or below this size resolves in ONE
     * collect-and-union-find job instead of O(log diameter) rounds of
     * join+aggregate+checkpoint (each round ~5 jobs; d08's loop at

@@ -95,8 +95,8 @@ object Components {
     val e = edges
       .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
       .where(col("a").isNotNull && col("b").isNotNull)
-    // driver union-find arm (the BoundedSearch eagerMaxQueries
-    // contract): an edge set at or below the cap resolves in ONE
+    // driver union-find arm (the BoundedSearch driver-collectable
+    // batch contract): an edge set at or below the cap resolves in ONE
     // collect + local union-find — labels identical by definition
     // (min node id per component), rounds = 0, no checkpoint needed
     // (nothing distributed to lose). The edge frame is PERSISTED before

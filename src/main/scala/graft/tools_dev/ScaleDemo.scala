@@ -273,10 +273,10 @@ object ScaleDemo {
     } // fullRun: codec family
 
     // ---- huge-query bounded batch ----
-    // nq > 4096 routes BoundedSearch to the lazy rounds (distributed
-    // Ctrl DataFrame); nq > 131072 routes to the fully-distributed
-    // cogroup path where even the query vectors and centroid rankings
-    // never sit on the driver. Third arg overrides the batch size
+    // nq ≤ 131072 takes BoundedSearch's driver-decided rounds;
+    // nq > 131072 routes to the fully-distributed cogroup path where
+    // even the query vectors and centroid rankings never sit on the
+    // driver. Third arg overrides the batch size
     // (e.g. 1000000 exercises the cogroup path).
     if (n >= 1000000 && sys.env.get("SCALE_ONLY").forall(s => s == "bounded")) {
       val nHuge = if (args.length > 2) args(2).toInt else 100000

@@ -26,6 +26,21 @@ class KernelsSpec extends SparkSpec {
     assert(gotDot.sameElements(vs.take(10).map(v => Kernels.dot(v, vs(0)))))
   }
 
+  test("LSH signature bits take Kernels.dot's sign on a near-zero dot") {
+    import graft.index.BinaryHash
+    // (1 − 2⁻¹⁵)(1 + 2⁻¹⁵) = 1 − 2⁻³⁰ exactly in double but 1.0f in
+    // float: the double dot is −2⁻³⁰ (bit 0) while float-rounded
+    // products sum to 0 (bit 1) — a kernel that rounds each product to
+    // float before widening flips this bit
+    val e = math.pow(2, -15).toFloat
+    val plane = Array(1f - e, 1f)
+    val v = Array(1f + e, -1f)
+    assert((plane(0) * v(0)).toDouble + (plane(1) * v(1)).toDouble == 0.0)
+    assert(Kernels.dot(plane, v) < 0)
+    assert(BinaryHash.LSHModel(Array(plane)).signature(v) == 0L)
+    assert(BinaryHash.WideLSHModel(Array(plane)).signature(v).sameElements(Array(0L)))
+  }
+
   test("TopK keeps k smallest with id tie-break") {
     val rnd = new scala.util.Random(3)
     val items = Array.fill(500)((rnd.nextInt(40).toDouble, rnd.nextLong().abs))
