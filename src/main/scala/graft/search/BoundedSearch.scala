@@ -28,12 +28,13 @@ import graft.profile.ErrorProfile.Trace
   *    worst distance counts as that round's probe count.
   *
   * Scale shape: each round reads ONLY the newly probed lists (partition
-  * pruning) and per-partition bounded heaps emit `parts × nq_active × k`
-  * rows — nothing per-vector ever sits on the driver. Batches up to
+  * pruning) and per-partition bounded heaps merge per query inside the
+  * round's one job, so the driver receives ≤ nq_active × k rows —
+  * nothing per-vector ever sits on the driver. Batches up to
   * [[graft.GraftConf.distributedMinQueries]] are decided on the driver
   * ([[searchEagerStaged]] for shallow schedules, [[searchStagedDriver]]
-  * otherwise); larger ones keep their control state in a Dataset
-  * ([[searchDistributed]]).
+  * otherwise; both build `results` on the driver); larger ones keep
+  * their control state in a Dataset ([[searchDistributed]]).
   */
 object BoundedSearch {
 
@@ -42,6 +43,12 @@ object BoundedSearch {
   final case class QueryStats(qid: Long, nprobeUsed: Int, predictedRecall: Float,
                               decidedAtStage: Int)
 
+  /** @param results (qid bigint, id bigint, dist double, rank int), rank
+    *                1..k by (dist, id) ascending, every column
+    *                non-nullable on every path. The driver-decided paths
+    *                (and [[timeSearch]]) return it already materialized
+    *                as a local relation — collecting it runs no job; the
+    *                distributed path returns a checkpointed frame. */
   final case class Result(results: DataFrame, stats: Seq[QueryStats])
 
   /** Per-query control state for the staged rounds — held in the
@@ -128,19 +135,23 @@ object BoundedSearch {
     val nlist = model.nlist
     val levels = traces.length
 
-    // path probe: a LIMIT-bounded count, not queries.count() — the full
-    // count is a whole job over the query plan spent only on routing,
-    // and for the huge batches it exists to detect it scans everything
-    // twice (once to count, once in searchDistributed)
-    if (forceDistributed ||
-        queries.limit(DistributedMinQueries + 1).count() > DistributedMinQueries)
+    if (forceDistributed)
+      return searchDistributed(ivfData, model, traces, queries, k,
+        multiplier, stdM)
+    // single-job routing guard (as in FlatSearch.knn): collect AT MOST
+    // the driver contract + 1 rows — a driver-collectable batch is then
+    // already on the driver, and a larger one bails to the
+    // DataFrame-resident path after materializing only that prefix
+    val qRaw: Array[(Long, Array[Float], Float)] = queries
+      .select(col("qid").cast("long"), col("vec"),
+        col("required_recall").cast("float"))
+      .limit(DistributedMinQueries + 1)
+      .as[(Long, Array[Float], Float)].collect()
+    if (qRaw.length > DistributedMinQueries)
       return searchDistributed(ivfData, model, traces, queries, k,
         multiplier, stdM)
 
-    val qRows: Array[(Long, Array[Float], Float)] = queries
-      .select(col("qid").cast("long"), col("vec"),
-        col("required_recall").cast("float"))
-      .as[(Long, Array[Float], Float)].collect().sortBy(_._1)
+    val qRows = qRaw.sortBy(_._1)
     val nq = qRows.length
     val qVecs = qRows.map { case (qid, v, r) =>
       (qid, if (model.metric == "ip") Kernels.l2Normalize(v) else v, r)
@@ -148,14 +159,14 @@ object BoundedSearch {
     // rank only as deep as the ROUNDS need (decision cap nlist/8 plus
     // the boundary geometry's nlist/8 + 20 window). The finishing pass
     // can probe out to stage × multiplier — but only for the few
-    // queries that cap out, so those re-rank deeper individually below
-    // instead of paying nq × full-depth rankings up front (at 100k
-    // queries × nlist=1024 the eager form shipped >1 GiB of rankings
-    // to the driver; the shallow form is ~4× smaller and the deep
-    // re-rank touches only the capped tail)
+    // queries that cap out, so those re-rank deeper individually in
+    // `finish` instead of paying nq × full-depth rankings up front (at
+    // 100k queries × nlist=1024 the eager form shipped >1 GiB of
+    // rankings to the driver; the shallow form is ~4× smaller and the
+    // deep re-rank touches only the capped tail)
     val shallowDepth = math.min(nlist, nlist / 8 + 20)
-    val ranks = IVFSearch.rankTop(spark, model,
-      qVecs.map(v => (v._1, v._2)), shallowDepth)
+    val qv = qVecs.map(v => (v._1, v._2))
+    val ranks = IVFSearch.rankTop(spark, model, qv, shallowDepth)
     val dBs = ranks.map { r =>
       ErrorProfile.boundaryDistances(r.map(_._2), r.map(_._1), model.interdisAt, nlist)
     }
@@ -165,18 +176,18 @@ object BoundedSearch {
     //    scan of all staged lists (≤ nlist/8 per query) — over-probing
     //    vs adaptive stop is bounded by that cap, and one job beats
     //    per-round round-trips
-    //  - otherwise: adaptive per-round scans, ONE action per round
-    //    (scan + top-k merge, collected) — per-round job count is the
-    //    floor at small batches (r11_compare_10m.log: 7-round
-    //    schedules at 10-200-query batches paid more scheduling than
-    //    scanning)
+    //  - otherwise: adaptive per-round scans, ONE job per round
+    //    (scan + per-query top-k reduce, collected) — per-round job
+    //    count is the floor at small batches (r11_compare_10m.log:
+    //    7-round schedules at 10-200-query batches paid more
+    //    scheduling than scanning)
     val decider = new Decider(nq, k, model.metric, traces, dBs,
       qVecs.map(_._3), multiplier, stdM, levels)
-    if (levels <= 4 && nq <= EagerMaxQueries)
-      searchEagerStaged(ivfData, model, qVecs, ranks, decider, k)
-    else
-      searchStagedDriver(ivfData, model, qVecs, ranks, decider, k,
-        shallowDepth)
+    val top =
+      if (levels <= 4 && nq <= EagerMaxQueries)
+        searchEagerStaged(ivfData, model, qv, ranks, decider, k)
+      else searchStagedDriver(ivfData, model, qv, ranks, decider, k)
+    finish(ivfData, model, qv, ranks, shallowDepth, decider, top, k)
   }
 
   /** Fully-distributed staged rounds for query batches past the
@@ -442,7 +453,7 @@ object BoundedSearch {
 
   /** List-keyed cogroup scan: for each probed list, stream its vectors
     * against the (qid, qvec) probe rows for that list with per-query
-    * bounded heaps — the distributed twin of [[scanLists]] (which
+    * bounded heaps — the distributed twin of [[probeTopK]] (which
     * broadcasts a driver-built probe map instead). Emits ≤ k rows per
     * (list, query).
     *
@@ -686,18 +697,18 @@ object BoundedSearch {
     * = 8 per query) are scanned in ONE pass with per-(query,
     * first-probed-stage) heaps; stage top-ks and every decision then
     * run driver-side on the collected partials, eliminating the
-    * per-round job latency. Decisions are bit-identical to the
-    * per-round paths (same [[decideStep]], same staged top-ks); deep
-    * schedules take [[searchStagedDriver]] — eager would probe nlist/8
-    * lists per query where adaptive stops far earlier. */
+    * per-round job latency; with [[finish]] a call runs at most two
+    * jobs. Decisions are bit-identical to the per-round paths (same
+    * [[decideStep]], same staged top-ks); deep schedules take
+    * [[searchStagedDriver]] — eager would probe nlist/8 lists per query
+    * where adaptive stops far earlier.
+    * @return each query's top-k at its decision stage */
   private def searchEagerStaged(ivfData: DataFrame, model: IVFModel,
-      qVecs: Array[(Long, Array[Float], Float)],
+      qVecs: Array[(Long, Array[Float])],
       ranks: Array[Array[(Int, Float)]], decider: Decider,
-      k: Int): Result = {
+      k: Int): Array[Array[(Double, Long)]] = {
     val spark = ivfData.sparkSession
     import spark.implicits._
-    val nq = qVecs.length
-    val nlist = model.nlist
     val levels = decider.nLevels
     val maxRank = 1 << (levels - 1)
 
@@ -710,7 +721,7 @@ object BoundedSearch {
         }
     }.groupBy(_._1).map { case (l, xs) => (l, xs.map(_._2)) }
     val bByList = spark.sparkContext.broadcast(byList)
-    val bQ = spark.sparkContext.broadcast(qVecs.map(v => (v._1, v._2)))
+    val bQ = spark.sparkContext.broadcast(qVecs)
     val metric = model.metric
 
     val partials: Array[(Int, Int, Long, Double)] = ivfData
@@ -740,50 +751,21 @@ object BoundedSearch {
       }.collect()
 
     // driver-side: per query, cumulative stage top-ks drive the decisions
-    val byQuery = partials.groupBy(_._1)
-    val finalRows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    var qi = 0
-    while (qi < nq) {
-      byQuery.get(qi) match {
-        case Some(rows) =>
-          val byStage = rows.groupBy(_._2)
-          var cum = Array.empty[(Double, Long)]
-          var decidedTopk = Array.empty[(Double, Long)]
-          var j = 0
-          while (j < levels) {
-            val add = byStage.getOrElse(j, Array.empty)
-              .map(r => (r._4, r._3))
-            cum = (cum ++ add).sortBy { case (d, id) => (d, id) }.take(k)
-            if (decider.myNprobe(qi) == 0) {
-              decider.evaluate(qi, j, cum.map(_._1))
-              if (decider.myNprobe(qi) != 0) decidedTopk = cum
-            }
-            j += 1
-          }
-          decidedTopk.foreach { case (d, id) =>
-            finalRows += ((qVecs(qi)._1, id, d))
-          }
-        case None =>
+    val decidedTopk = Array.fill(qVecs.length)(Array.empty[(Double, Long)])
+    partials.groupBy(_._1).foreach { case (qi, rows) =>
+      val byStage = rows.groupBy(_._2)
+      var cum = Array.empty[(Double, Long)]
+      var j = 0
+      while (j < levels) {
+        cum = keepK(cum, byStage.getOrElse(j, Array.empty).map(r => (r._4, r._3)), k)
+        if (decider.myNprobe(qi) == 0) {
+          decider.evaluate(qi, j, cum.map(_._1))
+          if (decider.myNprobe(qi) != 0) decidedTopk(qi) = cum
+        }
+        j += 1
       }
-      qi += 1
     }
-
-    var state = finalRows.toSeq.toDF("qid", "id", "dist")
-
-    // finishing pass: probe on from each query's decision stage
-    val extraMap = finishingProbeMap(spark, model, qVecs.map(v => (v._1, v._2)),
-      ranks, math.min(nlist, nlist / 8 + 20),
-      qi2 => (decider.decidedStage(qi2), math.min(decider.myNprobe(qi2), nlist)))
-    if (extraMap.nonEmpty) {
-      val extra = scanLists(ivfData, metric, extraMap,
-        qVecs.map(v => (v._1, v._2)), k)
-      state = state.unionByName(extra)
-    }
-    val stats = (0 until nq).map { qi2 =>
-      QueryStats(qVecs(qi2)._1, math.min(decider.myNprobe(qi2), nlist),
-        decider.predicted(qi2), decider.decidedStage(qi2))
-    }
-    Result(FlatSearch.mergeTopK(state, k), stats)
+    decidedTopk
   }
 
   /** Driver-decided adaptive rounds for deep schedules (levels > 4)
@@ -791,25 +773,22 @@ object BoundedSearch {
     * [[DistributedMinQueries]] queries: round j scans centroid ranks
     * (2^(j−1), 2^j] for still-active queries only, and the per-query
     * decision state lives in the shared [[Decider]]'s O(nq) driver
-    * arrays. Each round is exactly ONE Spark action: the probed-list
-    * partial scan merged to per-query round top-k (bounded collect of
-    * ≤ active × k rows); the cumulative top-k merge, recall
-    * prediction, and [[decideStep]] transition run on the driver.
+    * arrays. Each round is exactly ONE Spark job, [[probeTopK]]: the
+    * probed-list partial scan reduced to per-query round top-k
+    * (bounded collect of ≤ active × k rows); the cumulative top-k
+    * merge, recall prediction, and [[decideStep]] transition run on the
+    * driver; with [[finish]] a call runs at most rounds + 1 jobs.
     * Decisions are bit-identical to [[searchDistributed]] by
     * construction: same rankings, same boundary windows, same
     * [[predictedRecall]] on the same cumulative sorted distances, same
-    * transition — pinned by BoundedSearchSpec's equivalence tests. */
+    * transition — pinned by BoundedSearchSpec's equivalence tests.
+    * @return each query's top-k at its decision stage */
   private def searchStagedDriver(ivfData: DataFrame, model: IVFModel,
-      qVecs: Array[(Long, Array[Float], Float)],
-      ranks: Array[Array[(Int, Float)]], decider: Decider, k: Int,
-      shallowDepth: Int): Result = {
-    val spark = ivfData.sparkSession
-    import spark.implicits._
-    val nq = qVecs.length
-    val nlist = model.nlist
+      qv: Array[(Long, Array[Float])],
+      ranks: Array[Array[(Int, Float)]], decider: Decider,
+      k: Int): Array[Array[(Double, Long)]] = {
+    val nq = qv.length
     val levels = decider.nLevels
-    val qv = qVecs.map(v => (v._1, v._2))
-    val qidToIdx: Map[Long, Int] = qv.map(_._1).zipWithIndex.toMap
     // cumulative decision-time top-k per query; stops growing once the
     // query leaves the active set — exactly the top-k the distributed
     // path's control row carries for it
@@ -825,20 +804,9 @@ object BoundedSearch {
         val probeMap: Map[Int, Array[Int]] = active.flatMap { qi =>
           ranks(qi).slice(lo, hi).map { case (l, _) => (l, qi) }
         }.groupBy(_._1).map { case (l, xs) => (l, xs.map(_._2).toArray) }
-        // merge partials to per-query top-k INSIDE the job so the
-        // collect is ≤ active × k rows whatever the round's fan-out
-        val roundTopK = FlatSearch.mergeTopK(
-          scanLists(ivfData, model.metric, probeMap, qv, k), k)
-          .select(col("qid").cast("long"), col("id").cast("long"),
-            col("dist"))
-          .as[(Long, Long, Double)].collect()
-        val byQi = roundTopK.groupBy(r => qidToIdx(r._1))
+        val roundTopK = probeTopK(ivfData, model.metric, probeMap, qv, k)
         active.foreach { qi =>
-          byQi.get(qi).foreach { rows =>
-            val add = rows.map(r => (r._3, r._2))
-            cum(qi) = (cum(qi) ++ add)
-              .sortBy { case (d, id) => (d, id) }.take(k)
-          }
+          roundTopK.get(qi).foreach(add => cum(qi) = keepK(cum(qi), add, k))
           // like the distributed path, only queries with at least one
           // scanned row ever reach the decision transition
           if (cum(qi).nonEmpty) decider.evaluate(qi, j, cum(qi).map(_._1))
@@ -846,53 +814,38 @@ object BoundedSearch {
       }
       j += 1
     }
-
-    var state = (0 until nq).flatMap { qi =>
-      cum(qi).map { case (d, id) => (qv(qi)._1, id, d) }
-    }.toDF("qid", "id", "dist")
-
-    // finishing pass: decisionStage → stage × multiplier, shared with
-    // the other driver-decided path
-    val extraMap = finishingProbeMap(spark, model, qv, ranks, shallowDepth,
-      qi => (decider.decidedStage(qi), math.min(decider.myNprobe(qi), nlist)))
-    if (extraMap.nonEmpty)
-      state = state.unionByName(scanLists(ivfData, model.metric, extraMap,
-        qv, k))
-    val stats = (0 until nq).map { qi =>
-      QueryStats(qv(qi)._1, math.min(decider.myNprobe(qi), nlist),
-        decider.predicted(qi), decider.decidedStage(qi))
-    }
-    Result(FlatSearch.mergeTopK(state, k), stats)
+    cum
   }
 
-  /** Build the finishing-pass probe map from SHALLOW rankings: queries
-    * whose probe target exceeds the shallow depth (the capped tail —
-    * rare when the profile stops most queries early) re-rank deeper in
-    * one small second pass, so the up-front coarse ranking never ships
-    * nq × multiplier-depth rankings to the driver.
-    * @param bounds qi → (decidedStage, probe target) */
-  private def finishingProbeMap(spark: SparkSession, model: IVFModel,
-      qVecs: Array[(Long, Array[Float])], ranks: Array[Array[(Int, Float)]],
-      shallowDepth: Int, bounds: Int => (Int, Int)): Map[Int, Array[Int]] = {
-    val nq = qVecs.length
-    val deepIdx = (0 until nq).filter(qi => bounds(qi)._2 > shallowDepth)
+  /** Finishing pass of both driver-decided paths: each query probes on
+    * from its decision stage to stage × multiplier in ONE
+    * [[probeTopK]] job, and `results` is ranked on the driver from
+    * `top` plus those rows. The ranking is SHALLOW: queries whose probe
+    * target exceeds the shallow depth (the capped tail — rare when the
+    * profile stops most queries early) re-rank deeper here, so the
+    * up-front coarse ranking never ships nq × multiplier-depth rankings
+    * to the driver. */
+  private def finish(ivfData: DataFrame, model: IVFModel,
+      qv: Array[(Long, Array[Float])], ranks: Array[Array[(Int, Float)]],
+      shallowDepth: Int, decider: Decider, top: Array[Array[(Double, Long)]],
+      k: Int): Result = {
+    val upto = qv.indices.map(qi => math.min(decider.myNprobe(qi), model.nlist))
+    val deepIdx = qv.indices.filter(qi => upto(qi) > shallowDepth)
+    // rankTop aligns its result with input order, so the zip aligns for
+    // any qid layout
     val deepRanks: Map[Int, Array[(Int, Float)]] =
       if (deepIdx.isEmpty) Map.empty
-      else {
-        val maxDeep = deepIdx.map(qi => bounds(qi)._2).max
-        // rankTop aligns its result with input order, so the zip
-        // aligns for any qid layout
-        val dr = IVFSearch.rankTop(spark, model,
-          deepIdx.map(qi => qVecs(qi)).toArray, maxDeep)
-        deepIdx.zip(dr).toMap
-      }
-    (0 until nq).flatMap { qi =>
-      val (from, upto) = bounds(qi)
-      if (upto > from)
-        deepRanks.getOrElse(qi, ranks(qi)).slice(from, upto)
-          .map { case (l, _) => (l, qi) }
-      else Nil
+      else deepIdx.zip(IVFSearch.rankTop(ivfData.sparkSession, model,
+        deepIdx.map(qv(_)).toArray, deepIdx.map(upto).max)).toMap
+    val extraMap = qv.indices.flatMap { qi =>
+      deepRanks.getOrElse(qi, ranks(qi)).slice(decider.decidedStage(qi), upto(qi))
+        .map { case (l, _) => (l, qi) }
     }.groupBy(_._1).map { case (l, xs) => (l, xs.map(_._2).toArray) }
+    val stats = qv.indices.map { qi =>
+      QueryStats(qv(qi)._1, upto(qi), decider.predicted(qi), decider.decidedStage(qi))
+    }
+    Result(rankedResults(ivfData.sparkSession, qv.map(_._1), top,
+      probeTopK(ivfData, model.metric, extraMap, qv, k), k), stats)
   }
 
   /** Latency-bounded mode (`Auncel/IndexIVF.cpp:545-549`,
@@ -917,28 +870,43 @@ object BoundedSearch {
     val probeMap: Map[Int, Array[Int]] = qVecs.indices.flatMap { qi =>
       ranks(qi).take(budgets(qi)).map { case (l, _) => (l, qi) }
     }.groupBy(_._1).map { case (l, xs) => (l, xs.map(_._2).toArray) }
-    val partials = scanLists(ivfData, model.metric, probeMap, qVecs, k)
     val stats = qVecs.indices.map { qi =>
       QueryStats(qVecs(qi)._1, budgets(qi), -1f, budgets(qi))
     }
-    Result(FlatSearch.mergeTopK(partials, k), stats)
+    Result(rankedResults(spark, qVecs.map(_._1),
+      Array.fill(qVecs.length)(Array.empty[(Double, Long)]),
+      probeTopK(ivfData, model.metric, probeMap, qVecs, k), k), stats)
   }
 
-  /** Scan the given lists, computing per-partition bounded top-k only
-    * for the queries probing each list. */
-  private def scanLists(ivfData: DataFrame, metric: String,
-                        probeMap: Map[Int, Array[Int]],
-                        qVecs: Array[(Long, Array[Float])], k: Int): DataFrame = {
+  /** The k smallest of two per-query top-k lists, sorted by (dist, id). */
+  private def keepK(a: Array[(Double, Long)], b: Array[(Double, Long)],
+                    k: Int): Array[(Double, Long)] =
+    (a ++ b).sortBy { case (d, id) => (d, id) }.take(k)
+
+  /** Scan the probed lists in ONE job and return each probing query's
+    * top-k sorted by (dist, id), keyed by query index. Per-partition
+    * bounded [[TopK]] heaps (only for the queries probing each list)
+    * merge with a `reduceByKey` on the query index — one shuffle, no
+    * AQE re-plan — so the collect is ≤ active × k rows whatever the
+    * scan's task count. Exact: [[TopK.merge]] keeps the k smallest of
+    * the union under the same (dist, id) order a ranking window would
+    * use, and a query's ids are unique because each list is probed
+    * at most once per query. */
+  private def probeTopK(ivfData: DataFrame, metric: String,
+      probeMap: Map[Int, Array[Int]], qVecs: Array[(Long, Array[Float])],
+      k: Int): Map[Int, Array[(Double, Long)]] = {
+    if (probeMap.isEmpty) return Map.empty
     val spark = ivfData.sparkSession
     import spark.implicits._
-    if (probeMap.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double)].toDF("qid", "id", "dist")
-    val bq = spark.sparkContext.broadcast(qVecs)
-    val bp = spark.sparkContext.broadcast(probeMap)
+    val sc = spark.sparkContext
+    val active = new java.util.BitSet(qVecs.length)
+    probeMap.valuesIterator.foreach(_.foreach(active.set))
+    val bq = sc.broadcast(qVecs.map(_._2))
+    val bp = sc.broadcast(probeMap)
     ivfData
       .filter(col("list_no").isin(probeMap.keys.toSeq.sorted: _*))
       .select(col("list_no").cast("int"), col("id").cast("long"), col("vec"))
-      .as[(Int, Long, Array[Float])]
+      .as[(Int, Long, Array[Float])].rdd
       .mapPartitions { it =>
         val pm = bp.value
         val qs = bq.value
@@ -950,16 +918,31 @@ object BoundedSearch {
               while (i < qis.length) {
                 val qi = qis(i)
                 heaps.getOrElseUpdate(qi, new TopK(k))
-                  .add(Kernels.distance(metric, qs(qi)._2, vec), id)
+                  .add(Kernels.distance(metric, qs(qi), vec), id)
                 i += 1
               }
             case None =>
           }
         }
-        heaps.iterator.flatMap { case (qi, h) =>
-          h.sorted.iterator.map { case (d, id) => (qs(qi)._1, id, d) }
-        }
+        heaps.iterator
       }
-      .toDF("qid", "id", "dist")
+      .reduceByKey((a, b) => a.merge(b),
+        math.max(1, math.min(active.cardinality, sc.defaultParallelism)))
+      .mapValues(_.sorted)
+      .collect().toMap
+  }
+
+  /** `results` of the driver-held paths as a local relation: per query,
+    * `top` merged with the finishing pass's `extra`, ranked 1..k by
+    * (dist, id) — the rows a `row_number` window over the same pairs
+    * would keep, with no job to rank or to collect them. */
+  private def rankedResults(spark: SparkSession, qids: Array[Long],
+      top: Array[Array[(Double, Long)]], extra: Map[Int, Array[(Double, Long)]],
+      k: Int): DataFrame = {
+    import spark.implicits._
+    qids.indices.flatMap { qi =>
+      extra.get(qi).fold(top(qi))(keepK(top(qi), _, k)).iterator.zipWithIndex
+        .map { case ((d, id), r) => (qids(qi), id, d, r + 1) }
+    }.toDF("qid", "id", "dist", "rank")
   }
 }

@@ -1,7 +1,13 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.SpecAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.index.IVFIndex
+import org.apache.spark.sql.types._
+import graft.index.{IVFIndex, IVFModel}
+import graft.profile.ErrorProfile.Trace
 import graft.profile.ProfileTrainer
 import graft.search.{BoundedSearch, FlatSearch}
 
@@ -10,6 +16,7 @@ import graft.search.{BoundedSearch, FlatSearch}
   * success criterion — worst-case distance-threshold recall ≥ required
   * (`Auncel/eval/bound.cpp:400-414`). */
 class BoundedSearchSpec extends SparkSpec {
+  import BoundedSearchSpec.Fixture
 
   val d = 24
   val k = 20
@@ -39,6 +46,79 @@ class BoundedSearchSpec extends SparkSpec {
     results.map { case (qid, dists) =>
       (qid, dists.count(_ <= gtKth(qid) * 1.0005).toDouble / k)
     }
+
+  /** Train and assign an IVF index over `n` seeded clustered vectors
+    * and train its profile on the next `nTrain` vectors of the same
+    * stream. */
+  def fixture(n: Int, nTrain: Int, nl: Int, clusters: Int, seed: Long,
+              kk: Int = k): Fixture = {
+    val b = clusteredVecs(n, d, nClusters = clusters, seed = seed)
+    val bDF = vecDF(b)
+    val m = IVFIndex.train(bDF, nlist = nl, seed = 42L)
+    val a = IVFIndex.assign(bDF, m).cache()
+    val tq = vecDF(clusteredVecs(n + nTrain, d, nClusters = clusters, seed = seed)
+      .drop(n), "qid")
+    val gt = FlatSearch.knn(bDF, tq, kk)
+    Fixture(a, m, ProfileTrainer.train(a, m, tq, gt, maxTopk = kk, bs = 50))
+  }
+
+  // nlist=32 → levels 3 → the eager one-pass route for small batches
+  lazy val fix32 = fixture(2000, 100, nl = 32, clusters = 24, seed = 55)
+  // nlist=256 → levels 6 → the per-round searchStagedDriver route
+  lazy val fix256 = fixture(5120, 150, nl = 256, clusters = 48, seed = 91)
+
+  /** `n` clustered queries of the nlist-32 fixture's stream. */
+  def queries32(n: Int, recall: Int => Float): DataFrame = {
+    import spark.implicits._
+    clusteredVecs(2100 + n, d, nClusters = 24, seed = 55).drop(2100)
+      .zipWithIndex.map { case (v, i) => (i.toLong, v, recall(i)) }
+      .toSeq.toDF("qid", "vec", "required_recall")
+  }
+
+  /** `n` clustered queries of the nlist-256 fixture's stream. */
+  def queries256(n: Int): DataFrame = {
+    import spark.implicits._
+    clusteredVecs(5270 + n, d, nClusters = 48, seed = 91).drop(5270)
+      .zipWithIndex.map { case (v, i) => (i.toLong, v, 0.8f) }
+      .toSeq.toDF("qid", "vec", "required_recall")
+  }
+
+  /** Rows sorted by (qid, rank), and stats sorted by qid. */
+  def rowsAndStats(r: BoundedSearch.Result) = {
+    import spark.implicits._
+    (r.results.select(col("qid"), col("rank"), col("id"), col("dist"))
+      .as[(Long, Int, Long, Double)].collect().sortBy(x => (x._1, x._2)),
+      r.stats.sortBy(_.qid))
+  }
+
+  /** Run `body` and count the Spark jobs it submits from this thread
+    * (tagged through a thread-local property, so jobs of other threads
+    * do not count). */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("graft.spec.jobTag") == tag) n.incrementAndGet()
+    }
+    SpecAccess.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    sc.setLocalProperty("graft.spec.jobTag", tag)
+    try {
+      val out = body
+      SpecAccess.drainListenerBus(sc)
+      (out, n.get)
+    } finally {
+      sc.setLocalProperty("graft.spec.jobTag", null)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  /** Adaptive rounds a query took: decided at stage 2^(r−1). */
+  def roundsOf(s: BoundedSearch.QueryStats): Int =
+    Integer.numberOfTrailingZeros(Integer.highestOneBit(s.decidedAtStage)) + 1
 
   test("stagedTopK chunked query batches produce identical capture") {
     import org.apache.spark.sql.functions._
@@ -204,60 +284,34 @@ class BoundedSearchSpec extends SparkSpec {
   }
 
   test("eager staged path is bit-identical to the distributed path, mixed recalls") {
-    import spark.implicits._
     // nlist=32 → levels 3 → eager by default; forceDistributed reruns
     // the same queries through the per-round control Dataset. Required
     // recall varies per query, so queries decide at different rounds.
-    val b = clusteredVecs(2000, d, nClusters = 24, seed = 55)
-    val bDF = vecDF(b)
-    val m32 = IVFIndex.train(bDF, nlist = 32, seed = 42L)
-    val a32 = IVFIndex.assign(bDF, m32).cache()
-    val tq = vecDF(clusteredVecs(2100, d, nClusters = 24, seed = 55).drop(2000), "qid")
-    val gt32 = FlatSearch.knn(bDF, tq, k)
-    val tr32 = ProfileTrainer.train(a32, m32, tq, gt32, maxTopk = k, bs = 50)
-    val qdf = clusteredVecs(2130, d, nClusters = 24, seed = 55).drop(2100)
-      .zipWithIndex.map { case (v, i) => (i.toLong, v, Array(0.5f, 0.9f, 0.99f)(i % 3)) }
-      .toSeq.toDF("qid", "vec", "required_recall")
-    val eager = BoundedSearch.search(a32, m32, tr32, qdf, k,
-      multiplier = 4.0f, stdM = 1.0f)
-    val dist = BoundedSearch.search(a32, m32, tr32, qdf, k,
-      multiplier = 4.0f, stdM = 1.0f, forceDistributed = true)
-    val eRows = eager.results.select(col("qid"), col("rank"), col("id"), col("dist"))
-      .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
-    val dRows = dist.results.select(col("qid"), col("rank"), col("id"), col("dist"))
-      .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
-    assert(eager.stats.map(_.decidedAtStage).distinct.size > 1,
+    val Fixture(a32, m32, tr32) = fix32
+    val qdf = queries32(30, i => Array(0.5f, 0.9f, 0.99f)(i % 3))
+    val (eRows, eStats) = rowsAndStats(BoundedSearch.search(a32, m32, tr32,
+      qdf, k, multiplier = 4.0f, stdM = 1.0f))
+    val (dRows, dStats) = rowsAndStats(BoundedSearch.search(a32, m32, tr32,
+      qdf, k, multiplier = 4.0f, stdM = 1.0f, forceDistributed = true))
+    assert(eStats.map(_.decidedAtStage).distinct.size > 1,
       "queries must decide at more than one round")
     assert(eRows.sameElements(dRows))
-    assert(eager.stats == dist.stats.sortBy(_.qid))
+    assert(eStats == dStats)
   }
 
   test("deep-schedule driver-decided path is bit-identical to the distributed path") {
-    import spark.implicits._
-    // nlist=256 → levels 6 → the searchStagedDriver route (one action
+    // nlist=256 → levels 6 → the searchStagedDriver route (one job
     // per round, driver-side decisions); forceDistributed reruns the
     // per-round control Dataset on the identical inputs. Both must
     // agree on rows AND stats for every query — the decisions share
     // rankings, boundary windows, predictedRecall, and decideStep by
     // construction, and this pins the plumbing around them.
-    val b = clusteredVecs(5120, d, nClusters = 48, seed = 91)
-    val bDF = vecDF(b)
-    val m256 = IVFIndex.train(bDF, nlist = 256, seed = 42L)
-    val a256 = IVFIndex.assign(bDF, m256).cache()
-    val tq = vecDF(clusteredVecs(5270, d, nClusters = 48, seed = 91).drop(5120), "qid")
-    val gt = FlatSearch.knn(bDF, tq, k)
-    val tr = ProfileTrainer.train(a256, m256, tq, gt, maxTopk = k, bs = 50)
+    val Fixture(a256, m256, tr) = fix256
     assert(tr.length > 4, "config must exercise the deep (levels > 4) route")
-    val qdf = clusteredVecs(5310, d, nClusters = 48, seed = 91).drop(5270)
-      .zipWithIndex.map { case (v, i) => (i.toLong, v, 0.8f) }
-      .toSeq.toDF("qid", "vec", "required_recall")
-    def run(forceDistributed: Boolean) = {
-      val r = BoundedSearch.search(a256, m256, tr, qdf, k,
-        multiplier = 4.0f, stdM = 1.0f, forceDistributed = forceDistributed)
-      (r.results.select(col("qid"), col("rank"), col("id"), col("dist"))
-        .as[(Long, Int, Long, Double)].collect().sortBy(x => (x._1, x._2)),
-        r.stats.sortBy(_.qid))
-    }
+    val qdf = queries256(40)
+    def run(forceDistributed: Boolean) = rowsAndStats(
+      BoundedSearch.search(a256, m256, tr, qdf, k,
+        multiplier = 4.0f, stdM = 1.0f, forceDistributed = forceDistributed))
     val (hRows, hStats) = run(forceDistributed = false)
     val (dRows, dStats) = run(forceDistributed = true)
     assert(hRows.sameElements(dRows),
@@ -266,24 +320,11 @@ class BoundedSearchSpec extends SparkSpec {
   }
 
   test("fully-distributed (cogroup) path is bit-identical to the eager staged path") {
-    import spark.implicits._
-    val b = clusteredVecs(2000, d, nClusters = 24, seed = 55)
-    val bDF = vecDF(b)
-    val m32 = IVFIndex.train(bDF, nlist = 32, seed = 42L)
-    val a32 = IVFIndex.assign(bDF, m32).cache()
-    val tq = vecDF(clusteredVecs(2100, d, nClusters = 24, seed = 55).drop(2000), "qid")
-    val gt32 = FlatSearch.knn(bDF, tq, k)
-    val tr32 = ProfileTrainer.train(a32, m32, tq, gt32, maxTopk = k, bs = 50)
-    val qdf = clusteredVecs(2130, d, nClusters = 24, seed = 55).drop(2100)
-      .zipWithIndex.map { case (v, i) => (i.toLong, v, 0.8f) }
-      .toSeq.toDF("qid", "vec", "required_recall")
-    def run(forceDistributed: Boolean) = {
-      val r = BoundedSearch.search(a32, m32, tr32, qdf, k,
-        multiplier = 4.0f, stdM = 1.0f, forceDistributed = forceDistributed)
-      (r.results.select(col("qid"), col("rank"), col("id"), col("dist"))
-        .as[(Long, Int, Long, Double)].collect().sortBy(x => (x._1, x._2)),
-        r.stats.sortBy(_.qid))
-    }
+    val Fixture(a32, m32, tr32) = fix32
+    val qdf = queries32(30, _ => 0.8f)
+    def run(forceDistributed: Boolean) = rowsAndStats(
+      BoundedSearch.search(a32, m32, tr32, qdf, k,
+        multiplier = 4.0f, stdM = 1.0f, forceDistributed = forceDistributed))
     val (eRows, eStats) = run(forceDistributed = false)
     val (dRows, dStats) = run(forceDistributed = true)
     assert(eRows.sameElements(dRows),
@@ -297,28 +338,18 @@ class BoundedSearchSpec extends SparkSpec {
     // take every probe row; maxProbes=4 forces multi-salt sub-keys on
     // those hot lists, exercising the data-replication + probe-split
     // path that guards a task's memory at 100k+ queries
-    val b = clusteredVecs(2000, d, nClusters = 24, seed = 55)
-    val bDF = vecDF(b)
-    val m32 = IVFIndex.train(bDF, nlist = 32, seed = 42L)
-    val a32 = IVFIndex.assign(bDF, m32).cache()
-    val tq = vecDF(clusteredVecs(2100, d, nClusters = 24, seed = 55).drop(2000), "qid")
-    val gt32 = FlatSearch.knn(bDF, tq, k)
-    val tr32 = ProfileTrainer.train(a32, m32, tq, gt32, maxTopk = k, bs = 50)
+    val Fixture(a32, m32, tr32) = fix32
     val rnd = new scala.util.Random(91)
-    val anchor = b(17)
+    val anchor = clusteredVecs(2000, d, nClusters = 24, seed = 55)(17)
     val skewQ = Array.fill(30)(
       anchor.map(x => (x + 0.05 * rnd.nextGaussian()).toFloat))
     val qdf = skewQ.zipWithIndex.map { case (v, i) => (i.toLong, v, 0.8f) }
       .toSeq.toDF("qid", "vec", "required_recall")
     def run(salted: Boolean, distributed: Boolean) = {
       if (salted) sys.props("graft.cogroup.maxProbes") = "4"
-      try {
-        val r = BoundedSearch.search(a32, m32, tr32, qdf, k,
-          multiplier = 4.0f, stdM = 1.0f, forceDistributed = distributed)
-        (r.results.select(col("qid"), col("rank"), col("id"), col("dist"))
-          .as[(Long, Int, Long, Double)].collect().sortBy(x => (x._1, x._2)),
-          r.stats.sortBy(_.qid))
-      } finally if (salted) sys.props.remove("graft.cogroup.maxProbes")
+      try rowsAndStats(BoundedSearch.search(a32, m32, tr32, qdf, k,
+        multiplier = 4.0f, stdM = 1.0f, forceDistributed = distributed))
+      finally if (salted) sys.props.remove("graft.cogroup.maxProbes")
     }
     val (eRows, eStats) = run(salted = false, distributed = false)
     val (sRows, sStats) = run(salted = true, distributed = true)
@@ -333,31 +364,73 @@ class BoundedSearchSpec extends SparkSpec {
     // (searchStagedDriver) rather than the eager scan; per-query
     // decisions are independent of the route, so the forced
     // fully-distributed run must give identical rows and stats.
-    val b = clusteredVecs(1500, d, nClusters = 24, seed = 77)
-    val bDF = vecDF(b)
-    val m32 = IVFIndex.train(bDF, nlist = 32, seed = 42L)
-    val a32 = IVFIndex.assign(bDF, m32).cache()
-    val tq = vecDF(clusteredVecs(1600, d, nClusters = 24, seed = 77).drop(1500), "qid")
-    val gt32 = FlatSearch.knn(bDF, tq, k = 10)
-    val tr32 = ProfileTrainer.train(a32, m32, tq, gt32, maxTopk = 10, bs = 50)
+    val Fixture(a32, m32, tr32) =
+      fixture(1500, 100, nl = 32, clusters = 24, seed = 77, kk = 10)
     assert(tr32.length <= 4, "config must be shallow enough for the eager path")
     val nq = 32768 + 32
     val qdf = clusteredVecs(nq, d, nClusters = 24, seed = 78)
       .zipWithIndex.map { case (v, i) => (i.toLong, v, 0.8f) }
       .toSeq.toDF("qid", "vec", "required_recall")
-    def run(forceDistributed: Boolean) = {
-      val r = BoundedSearch.search(a32, m32, tr32, qdf, k = 10,
-        multiplier = 4.0f, stdM = 1.0f, forceDistributed = forceDistributed)
-      (r.results.select(col("qid"), col("rank"), col("id"), col("dist"))
-        .as[(Long, Int, Long, Double)].collect().sortBy(x => (x._1, x._2)),
-        r.stats.sortBy(_.qid))
-    }
+    def run(forceDistributed: Boolean) = rowsAndStats(
+      BoundedSearch.search(a32, m32, tr32, qdf, k = 10,
+        multiplier = 4.0f, stdM = 1.0f, forceDistributed = forceDistributed))
     val (sRows, sStats) = run(forceDistributed = false)
     assert(sStats.size == nq)
     assert(sRows.map(_._1).distinct.length == nq, "some query lost its rows")
     val (dRows, dStats) = run(forceDistributed = true)
     assert(sRows.sameElements(dRows), "driver-decided rows differ from distributed rows")
     assert(sStats == dStats, "driver-decided stats differ from distributed stats")
+  }
+
+  test("driver-decided calls run one job per round plus the finishing pass") {
+    // per round ONE job (scan + per-query top-k reduce, collected), one
+    // more for the finishing pass, no routing or ranking jobs, and
+    // `results` arrives materialized
+    val Fixture(a256, m256, tr) = fix256
+    val qdf = queries256(40)
+    val (staged, jobs) = jobsOf(BoundedSearch.search(a256, m256, tr, qdf, k,
+      multiplier = 4.0f, stdM = 1.0f))
+    val rounds = staged.stats.map(roundsOf).max
+    assert(rounds > 1, "config must take several adaptive rounds")
+    assert(jobs <= rounds + 1, s"$jobs jobs for $rounds rounds")
+    assert(jobsOf(staged.results.collect())._2 == 0,
+      "collecting driver-decided results ran a job")
+
+    val Fixture(a32, m32, tr32) = fix32
+    val (eager, eJobs) = jobsOf(BoundedSearch.search(a32, m32, tr32,
+      queries32(30, _ => 0.8f), k, multiplier = 4.0f, stdM = 1.0f))
+    assert(eJobs <= 2, s"eager call ran $eJobs jobs")
+    assert(jobsOf(eager.results.collect())._2 == 0,
+      "collecting eager results ran a job")
+  }
+
+  test("results have one schema and gap-free ranks on every path") {
+    import spark.implicits._
+    // the same batch through the eager (nlist 32), staged-driver
+    // (nlist 256) and distributed routes, plus timeSearch; callers
+    // join and order on these columns
+    val qdf = queries32(30, _ => 0.8f)
+    val Fixture(a32, m32, tr32) = fix32
+    val Fixture(a256, m256, tr) = fix256
+    def run(f: Fixture, forceDistributed: Boolean) =
+      BoundedSearch.search(f.ivf, f.model, f.traces, qdf, k,
+        multiplier = 4.0f, stdM = 1.0f, forceDistributed = forceDistributed).results
+    val timed = BoundedSearch.timeSearch(a32, m32,
+      qdf.withColumn("budget_ms", lit(8.0)), k, costPerProbeMs = 1.0).results
+    val expected = StructType(Seq(
+      StructField("qid", LongType, nullable = false),
+      StructField("id", LongType, nullable = false),
+      StructField("dist", DoubleType, nullable = false),
+      StructField("rank", IntegerType, nullable = false)))
+    Seq("eager" -> run(fix32, false), "staged" -> run(fix256, false),
+        "distributed32" -> run(fix32, true), "distributed256" -> run(fix256, true),
+        "timeSearch" -> timed).foreach { case (name, res) =>
+      assert(res.schema == expected, s"$name schema ${res.schema.simpleString}")
+      val ranks = res.select(col("qid"), col("rank")).as[(Long, Int)].collect()
+        .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).sorted.toSeq }
+      assert(ranks.size == 30, s"$name lost queries")
+      assert(ranks.values.forall(_ == (1 to k)), s"$name ranks are not 1..$k")
+    }
   }
 
   test("latency-bounded search respects the probe budget") {
@@ -370,4 +443,9 @@ class BoundedSearchSpec extends SparkSpec {
     assert(res.stats.forall(_.nprobeUsed <= 8))
     assert(res.results.count() > 0)
   }
+}
+
+object BoundedSearchSpec {
+  /** An assigned IVF table with its model and trained traces. */
+  final case class Fixture(ivf: DataFrame, model: IVFModel, traces: Array[Trace])
 }
